@@ -349,7 +349,11 @@ def ngram_jaccard_pairs(
     candidates emerge with both shingle sets attached and the Jaccard
     verifies in place. The corpus text is read and shingled exactly
     once (the join-back form re-shingles it twice more — measured 2x
-    slower end-to-end at bench scale), and nothing is cached."""
+    slower end-to-end at bench scale), and nothing is cached.
+
+    Precondition: ``key`` is unique per document. The fused path emits
+    each pair once per pair of DOCUMENTS, so two documents sharing a
+    key emit the same (a, b) row more than once."""
     inter_ab = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union_ab = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
     if pairs is None:
@@ -379,9 +383,13 @@ def _lsh_jaccard_fused(
 ) -> DataFrame:
     """Single-pass MinHash-LSH near-dup pipeline: shingle-hash ->
     minhash -> band buckets (hash arrays carried along) -> within-
-    bucket pairs with exact Jaccard verify. One text scan, two
-    shuffles (bucket groupBy + final distinct), zero caching, zero
-    joins.
+    bucket pairs with exact Jaccard verify. One text scan, one bucket
+    groupBy shuffle, zero caching, zero joins: each pair is emitted only
+    from the first band its two documents share, so the pair stream is
+    unique without a trailing distinct(). That distinct() shuffle stays
+    only on the ``max_bucket`` path, where a capped bucket breaks the
+    first-shared-band invariant. Document keys must be unique (see
+    ``ngram_jaccard_pairs``).
 
     The verify intersects the DISTINCT token-hash shingle hashes, not
     the shingle strings: |hash(A) ∩ hash(B)| / |hash(A) ∪ hash(B)|
@@ -527,8 +535,6 @@ def _banded_signature_kernel(
     BFMT = ",".join(["%d"] * rows_per_band)
 
     def run(batches):
-        from rio_toa_spark.operators.batching import coalesce_batches
-
         md5 = hashlib.md5
         cache: dict = {}
         bcache: dict = {}
@@ -542,7 +548,7 @@ def _banded_signature_kernel(
 
         import itertools
 
-        for pdf in coalesce_batches(batches):
+        for pdf in batches:
             keys_in = pdf[key].to_numpy()
             texts = pdf["_nt"].tolist()
             doc_keys = []
@@ -741,9 +747,7 @@ def _bucket_jaccard_verify(threshold: float, band_dedup: bool = False):
             out_j.append(jv[keep])
 
     def run(batches):
-        from rio_toa_spark.operators.batching import coalesce_batches
-
-        for pdf in coalesce_batches(batches):
+        for pdf in batches:
             out_a: list = []
             out_b: list = []
             out_j: list = []

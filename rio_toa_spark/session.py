@@ -1,13 +1,18 @@
 """SparkSession factory with scale-oriented defaults.
 
 The settings below are the ones that matter at 100 TB just as much as
-on local[32]:
+on a single local box:
 
 * AQE on (runtime coalescing + skew-join splitting backstops the
   explicit salting done by the spatial layer).
-* Arrow execution for every pandas-UDF / mapInPandas boundary, with a
-  bounded batch size so a pixel-heavy batch (binary tile payloads)
-  cannot blow executor memory — this replaces the reference's
+* Arrow execution for every pandas-UDF / mapInPandas / mapInArrow
+  boundary, with each Python batch bounded by BYTES: a batch holds at
+  most ARROW_MAX_BYTES_PER_BATCH of row data, so a Python worker's
+  input per batch stays under that bound whatever the row width: 16
+  half-MiB tile rows, or up to Spark's default record cap of 10 000
+  small page / embedding rows, enough to amortize the per-batch
+  Arrow/pandas overhead of the small-row kernels without any kernel
+  re-batching by hand. This replaces the reference's
   riomucho window streaming (rio_toa/radiance.py:122-128).
 * shuffle partition count sized by the caller (cores on local mode,
   2-3x total cores on a cluster).
@@ -20,9 +25,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
-# Tile rows carry ~0.5 MiB binary payloads; 256 rows/batch keeps an
-# Arrow batch near 128 MiB worst-case, far under executor headroom.
-ARROW_MAX_RECORDS_PER_BATCH = 256
+ARROW_MAX_BYTES_PER_BATCH = 8 << 20
 
 
 def get_spark(
@@ -32,7 +35,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine."""
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE", DEFAULT_SHUFFLE_PARTITIONS)
     )
@@ -46,8 +50,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(ARROW_MAX_RECORDS_PER_BATCH),
+            "spark.sql.execution.arrow.maxBytesPerBatch",
+            str(ARROW_MAX_BYTES_PER_BATCH),
         )
         # Tile/page parquet files are written small at test SF; on a
         # real cluster this bound splits 100 TB into ~128 MiB tasks.

@@ -196,3 +196,41 @@ def test_media_pipelines_shuffle_free(spark):
     for chain in (img_chain, audio_chain, frames_chain):
         plan = _plan(chain)
         assert "Exchange" not in plan, plan
+
+
+def test_arrow_batches_bounded_by_bytes(spark):
+    """Python batches are bounded by bytes, not rows: half-MiB tile-like
+    rows arrive at most 8 MiB per batch, while 24-byte rows arrive in
+    batches far above a small row cap, for both the pandas and the Arrow
+    boundary."""
+    import pandas as pd
+    import pyarrow as pa
+
+    def pandas_counts(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"n": [len(pdf)]})
+
+    def arrow_counts(batches):
+        for rb in batches:
+            yield pa.RecordBatch.from_pydict({"n": [rb.num_rows]})
+
+    def batch_rows(df):
+        return [
+            [r.n for r in df.mapInPandas(pandas_counts, "n long").collect()],
+            [r.n for r in df.mapInArrow(arrow_counts, "n long").collect()],
+        ]
+
+    half_mib = 1 << 19
+    wide = spark.range(0, 64, 1, 1).select(
+        F.col("id"), F.expr(f"unhex(repeat('00', {half_mib}))").alias("payload")
+    )
+    for counts in batch_rows(wide):
+        assert sum(counts) == 64
+        assert max(counts) * half_mib <= 8 << 20, counts
+
+    narrow = spark.range(0, 4096, 1, 1).select(
+        F.col("id"), (F.col("id") * 2).alias("a"), (F.col("id") * 3).alias("b")
+    )
+    for counts in batch_rows(narrow):
+        assert sum(counts) == 4096
+        assert max(counts) > 256, counts
